@@ -19,6 +19,18 @@ shapes:
   multisplit+all2all. This is the 10^12-key path: state never
   concentrates on one node.
 
+Shard placement: every stage that hands shards to Python (both
+packed build layouts, the key-shipping build, ``delete_broadcast``
+and the offset-filter build) goes through :func:`place_shards`,
+which sends shard ``s`` to partition ``s mod P`` with
+``P = min(num_shards, defaultParallelism)``. As in the reference,
+the number of local ops is the number of devices (cores), not the
+number of shards: each Python task owns whole shards, none is empty,
+and none pays the fixed per-task worker cost for a handful of rows.
+``write_bucketed_keys`` keeps its hash repartition into
+``num_shards`` partitions, because there the partitioning sets the
+file layout, not a Python stage.
+
 Scale notes (100 TB / 1000 executors):
 * build is map-side only in merged mode — no shuffle of raw keys;
   the only exchanged bytes are filter blobs (treeReduce).
@@ -346,6 +358,27 @@ def shard_expr(key_col: str, num_shards: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("long")
 
 
+def place_shards(df: DataFrame, shard, num_shards: int) -> DataFrame:
+    """The one placement rule for every stage that hands shards to
+    Python: shard ``s`` goes to partition ``s mod P`` with
+    ``P = min(num_shards, defaultParallelism)`` — one Python task per
+    core, each owning ⌈num_shards/P⌉ or ⌊num_shards/P⌋ whole shards
+    (the reference's one-local-op-per-device shape,
+    ``CuckooFilterMultiGPU.cuh:168-323``). Hashing the shard ids
+    instead leaves some partitions empty and doubles others up, and
+    every extra Python task pays a fixed worker cost whatever its row
+    count. ``shard`` is a Column holding the shard id."""
+    parts = min(num_shards, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartitionById(parts, shard.cast("int"))
+
+
+def _non_null_keys(df: DataFrame, key_col: str) -> DataFrame:
+    """Build input with null keys dropped JVM-side, before any
+    Exchange: a null key is never inserted and never counted in a
+    shard's ``rows``."""
+    return df.where(F.col(key_col).isNotNull())
+
+
 def _check_broadcast_size(flt, op: str) -> bool:
     """Shared broadcast-lane size guard for the sharded filter
     classes. Collecting + broadcasting every shard blob only makes
@@ -437,12 +470,13 @@ class ShardedCuckooFilter:
             )
 
         def build_shards(batches: "Iterator[pd.DataFrame]"):
-            # one partition may hold several shards (hash of the shard
-            # id decides placement); group pandas-side — this avoids
-            # the sort groupBy().applyInPandas() would inject, so the
-            # Exchange is the only data movement, and it carries ONLY
-            # the 8-byte key: the shard id is recomputed from the key
-            # in numpy (bit-exact with the JVM router).
+            # one partition holds several whole shards (place_shards
+            # sends shard s to partition s mod P); group pandas-side —
+            # this avoids the sort groupBy().applyInPandas() would
+            # inject, so the Exchange is the only data movement, and
+            # it carries ONLY the 8-byte key: the shard id is
+            # recomputed from the key in numpy (bit-exact with the
+            # JVM router).
             from cuckoo_filter_spark.hashing import xxhash64_u64
 
             per_shard: dict[int, list[np.ndarray]] = {}
@@ -473,11 +507,10 @@ class ShardedCuckooFilter:
                     "failures": [flt.failures],
                 })
 
-        shards = (
-            df.select(F.col(key_col))
-            .repartition(num_shards, shard_expr(key_col, num_shards))
-            .mapInPandas(build_shards, schema=_SHARD_SCHEMA)
-        )
+        keys = _non_null_keys(df, key_col).select(F.col(key_col))
+        shards = place_shards(
+            keys, shard_expr(key_col, num_shards), num_shards
+        ).mapInPandas(build_shards, schema=_SHARD_SCHEMA)
         return ShardedCuckooFilter(
             shards, num_shards, cfg, key_col,
             shard_num_buckets=cfg.num_buckets_for(per_shard_cap),
@@ -504,36 +537,34 @@ class ShardedCuckooFilter:
         f = cfg.bits_per_tag
         # pow2 (xor) or even (addsub) bucket counts both fit
         shard_shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
+        keys = _non_null_keys(df, key_col)
         if shard_shift is not None:
             one = F.shiftleft(
                 shard_expr(key_col, num_shards), shard_shift
             ).bitwiseOR(packed_expr(key_col, nb, f, cfg.bucket_policy))
-            shards = (
-                df.select(one.alias("__packed"))
-                .repartition(
-                    num_shards,
-                    F.shiftrightunsigned(F.col("__packed"), shard_shift),
-                )
-                .mapInArrow(
-                    _arrow_shard_builder(
-                        per_shard_cap, cfg, shard_shift=shard_shift
-                    ),
-                    schema=_SHARD_SCHEMA,
-                )
+            shards = place_shards(
+                keys.select(one.alias("__packed")),
+                F.shiftrightunsigned(F.col("__packed"), shard_shift),
+                num_shards,
+            ).mapInArrow(
+                _arrow_shard_builder(
+                    per_shard_cap, cfg, shard_shift=shard_shift
+                ),
+                schema=_SHARD_SCHEMA,
             )
         else:
-            shards = (
-                df.select(
+            shards = place_shards(
+                keys.select(
                     shard_expr(key_col, num_shards).alias("__shard"),
                     packed_expr(
                         key_col, nb, f, cfg.bucket_policy
                     ).alias("__packed"),
-                )
-                .repartition(num_shards, "__shard")
-                .mapInArrow(
-                    _arrow_shard_builder(per_shard_cap, cfg),
-                    schema=_SHARD_SCHEMA,
-                )
+                ),
+                F.col("__shard"),
+                num_shards,
+            ).mapInArrow(
+                _arrow_shard_builder(per_shard_cap, cfg),
+                schema=_SHARD_SCHEMA,
             )
         return ShardedCuckooFilter(
             shards, num_shards, cfg, key_col, shard_num_buckets=nb
@@ -668,6 +699,7 @@ class ShardedCuckooFilter:
         per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
         nb = cfg.num_buckets_for(per_shard_cap)
         shard_shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
+        keys = _non_null_keys(df, key_col)
         if shard_shift is not None:
             one = F.shiftleft(
                 shard_expr(key_col, num_shards), shard_shift
@@ -675,7 +707,7 @@ class ShardedCuckooFilter:
                 packed_expr(key_col, nb, cfg.bits_per_tag, cfg.bucket_policy)
             )
             (
-                df.select(one.alias("__packed"))
+                keys.select(one.alias("__packed"))
                 .repartition(
                     num_shards,
                     F.shiftrightunsigned(F.col("__packed"), shard_shift),
@@ -684,7 +716,7 @@ class ShardedCuckooFilter:
             )
         else:
             (
-                df.select(
+                keys.select(
                     shard_expr(key_col, num_shards).alias("__shard"),
                     packed_expr(
                         key_col, nb, cfg.bits_per_tag, cfg.bucket_policy
@@ -906,6 +938,9 @@ class ShardedCuckooFilter:
                 r.shard_id: CuckooFilter.from_bytes(bytes(r.blob))
                 for r in self.shards.collect()
             }
+            if not filters:
+                # built from an empty frame: no shard rows, no members
+                return queries.withColumn(out_col, F.lit(False))
             any_f = next(iter(filters.values()))
             nb, bs = any_f.num_buckets, any_f.config.bucket_size
             dtype_name = any_f.buckets.dtype.name
@@ -1151,10 +1186,10 @@ class ShardedCuckooFilter:
     ) -> tuple[DataFrame, "ShardedCuckooFilter"]:
         """Zero-sort functional delete for broadcastable state (the
         same regime as :meth:`contains_broadcast`): shard blobs ride
-        a broadcast variable, delete keys take ONE hash Exchange to
-        their shard's partition (plain repartition — no cogroup, so
-        no per-partition sort of the key stream), and each task
-        applies the batch delete for the shards it owns, emitting
+        a broadcast variable, delete keys take ONE Exchange to their
+        shard's partition (:func:`place_shards` — no cogroup, so no
+        per-partition sort of the key stream), and each task applies
+        the batch delete for the shards it owns, emitting
         one row per touched shard (new blob + packed results).
         Untouched shards pass through driver-side. Use :meth:`delete`
         (cogroup-routed) when the filter is too big to broadcast.
@@ -1263,8 +1298,11 @@ class ShardedCuckooFilter:
                             cfg.bucket_policy),
             )
         touched = (
-            routed.withColumn("__shard", shard_expr(key_col, num_shards))
-            .repartition(num_shards, "__shard")
+            place_shards(
+                routed.withColumn("__shard", shard_expr(key_col, num_shards)),
+                F.col("__shard"),
+                num_shards,
+            )
             .mapInPandas(apply_delete, schema=schema)
             .persist()
         )
@@ -1436,11 +1474,10 @@ class ShardedOffsetFilter:
                     "kicks": [flt.kicks], "failures": [flt.failures],
                 })
 
-        shards = (
-            df.select(F.col(key_col))
-            .repartition(num_shards, shard_expr(key_col, num_shards))
-            .mapInPandas(build_shards, schema=_SHARD_SCHEMA)
-        )
+        keys = _non_null_keys(df, key_col).select(F.col(key_col))
+        shards = place_shards(
+            keys, shard_expr(key_col, num_shards), num_shards
+        ).mapInPandas(build_shards, schema=_SHARD_SCHEMA)
         return ShardedOffsetFilter(shards, num_shards, key_col)
 
     def contains(self, queries: DataFrame, out_col: str = "member") -> DataFrame:

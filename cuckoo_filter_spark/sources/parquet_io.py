@@ -73,16 +73,23 @@ def read_matched_splits(
     (which would shatter the big scan into thousands of tasks).
     Splits never go below 1 MB: below parquet row-group granularity
     extra splits are empty tasks.
+
+    The split is ``ceil(total / target)`` plus ``openCostInBytes`` of
+    slack (below the 128 MB cap): near-equal files are each a few
+    bytes over ``total / target``, and a split that small cuts a
+    sliver off every file and packs the slivers into one extra task
+    that reads no row group (4 near-equal files at target 4 would
+    scan as 5 splits, the fifth empty).
     """
-    target = target_splits or spark.sparkContext.defaultParallelism
+    target = max(target_splits or spark.sparkContext.defaultParallelism, 1)
     jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     total = fs.getContentSummary(jpath).getLength()
-    split = min(
-        128 << 20, max(1 << 20, int(total / max(target, 1)))
-    )
+    split = min(128 << 20, max(1 << 20, -(-total // target)))
     open_cost = (4 << 20) if split >= (128 << 20) else min(split // 4, 1 << 20)
+    if split < (128 << 20):
+        split = min(128 << 20, split + open_cost)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
     return spark.read.parquet(path)

@@ -12,7 +12,7 @@ from cuckoo_filter_spark.config import CuckooConfig
 from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 from cuckoo_filter_spark.hashing import key_from_content, keys_to_unsigned
 from cuckoo_filter_spark.operators.membership import (
-    DistributedCuckooFilter, ShardedCuckooFilter,
+    DistributedCuckooFilter, ShardedCuckooFilter, ShardedOffsetFilter,
 )
 from cuckoo_filter_spark.sources.repo_table import (
     repo_files_from_documents, synthetic_repo_files,
@@ -340,3 +340,35 @@ def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
     bcast = sharded.contains_broadcast(mixed, "key").select("key", "member")
     assert routed.exceptAll(bcast).count() == 0
     assert bcast.exceptAll(routed).count() == 0
+
+
+def test_build_skips_null_keys(spark):
+    """A null key is never inserted and never counted: 3 real keys
+    plus a null give rows == occupied == 3 on every build path."""
+    df = spark.createDataFrame([(1,), (2,), (None,), (3,)], "key long")
+    builds = [
+        ShardedCuckooFilter.build(df, "key", 64, 4, CFG),
+        ShardedCuckooFilter.build(df, "key", 64, 4, CFG, jvm_pack=False),
+        ShardedOffsetFilter.build(df, "key", 64, 4),
+    ]
+    for flt in builds:
+        m = flt.metrics().collect()[0]
+        assert (m.rows, m.occupied, m.failures) == (3, 3, 0)
+    probes = spark.createDataFrame([(1,), (2,), (3,)], "key long")
+    out = builds[0].contains_broadcast(probes, "key")
+    assert out.filter(~F.col("member")).count() == 0
+
+
+def test_contains_broadcast_empty_filter(spark):
+    """A filter built from an empty DataFrame answers every probe
+    False and keeps every query column."""
+    empty = spark.createDataFrame([], "key long")
+    flt = ShardedCuckooFilter.build(empty, "key", 64, 4, CFG)
+    queries = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (None, "c")], "key long, tag string"
+    )
+    out = flt.contains_broadcast(queries, "key")
+    assert out.columns == ["key", "tag", "member"]
+    assert sorted(out.collect(), key=lambda r: r.tag) == [
+        (1, "a", False), (2, "b", False), (None, "c", False),
+    ]

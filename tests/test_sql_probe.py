@@ -16,7 +16,7 @@ from cuckoo_filter_spark.hashing import (
     keys_to_unsigned,
 )
 from cuckoo_filter_spark.operators.membership import (
-    DistributedCuckooFilter, ShardedCuckooFilter,
+    DistributedCuckooFilter, ShardedCuckooFilter, ShardedOffsetFilter,
 )
 
 CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
@@ -82,13 +82,48 @@ def test_contains_sql_merged(spark, keys_df):
 
 def test_packed_build_matches_key_build(spark, keys_df):
     df, keys = keys_df
-    a = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG, jvm_pack=True)
-    b = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG, jvm_pack=False)
-    blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
-               for r in a.shards.collect()}
-    blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
-               for r in b.shards.collect()}
-    assert blobs_a == blobs_b  # bit-identical filters
+    # 16 shards: several per task; 2 shards: fewer shards than cores
+    for num_shards in (8, 16, 2):
+        a = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG,
+                                      jvm_pack=True)
+        b = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG,
+                                      jvm_pack=False)
+        blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
+                   for r in a.shards.collect()}
+        blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
+                   for r in b.shards.collect()}
+        assert set(blobs_a) == set(range(num_shards))
+        assert blobs_a == blobs_b, num_shards  # bit-identical filters
+
+
+@pytest.mark.parametrize("num_shards", [16, 2])
+def test_shard_placement_one_task_per_core(spark, keys_df, num_shards):
+    """Every stage that hands shards to Python runs min(num_shards,
+    defaultParallelism) tasks, shard s in partition s mod P — whole
+    shards, an equal share per task, no empty task."""
+    df, _ = keys_df
+    parts = min(num_shards, spark.sparkContext.defaultParallelism)
+    for jvm_pack in (True, False):
+        flt = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG,
+                                        jvm_pack=jvm_pack)
+        assert flt.shards.rdd.getNumPartitions() == parts
+        placed = flt.shards.select(
+            F.spark_partition_id().alias("p"), "shard_id"
+        ).collect()
+        by_part: dict[int, set[int]] = {}
+        for r in placed:
+            by_part.setdefault(r.p, set()).add(r.shard_id)
+        assert by_part == {
+            p: set(range(p, num_shards, parts)) for p in range(parts)
+        }
+        assert {len(s) for s in by_part.values()} == {num_shards // parts}
+    _, new = flt.delete_broadcast(df)
+    assert new._delete_src.rdd.getNumPartitions() == parts
+    assert new.total_occupied() == 0
+    new.release()
+    off = ShardedOffsetFilter.build(df, "key", 6000, num_shards)
+    assert off.shards.rdd.getNumPartitions() == parts
+    assert off.shards.count() == num_shards
 
 
 def test_contains_sql_sharded(spark, keys_df):
@@ -144,6 +179,36 @@ def test_read_bucketed_keys_split_parallelism(spark, keys_df, tmp_path):
         a = ShardedCuckooFilter.build_bucketed(bucketed, 6000, 8, CFG)
         out = a.contains_broadcast(df, "key")
         assert out.filter(~F.col("member")).count() == 0
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+        spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
+
+
+def test_read_matched_splits_near_equal_files(spark, tmp_path):
+    """4 near-equal parquet files at target 4 scan as exactly 4
+    non-empty splits: each file is a few bytes over total/4, and a
+    split of floor(total/4) cut a sliver off every file into an
+    extra task that read no row group."""
+    from cuckoo_filter_spark.sources.parquet_io import read_matched_splits
+
+    path = str(tmp_path / "near_equal")
+    (
+        spark.range(0, 1_200_000, numPartitions=4)
+        .select(F.xxhash64("id").alias("key"))
+        .write.parquet(path)
+    )
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    prev_open = spark.conf.get("spark.sql.files.openCostInBytes")
+    try:
+        df = read_matched_splits(spark, path, target_splits=4)
+        assert df.rdd.getNumPartitions() == 4
+        rows = {
+            r.p: r["count"]
+            for r in df.groupBy(F.spark_partition_id().alias("p"))
+            .count().collect()
+        }
+        assert sorted(rows) == [0, 1, 2, 3]  # no empty split
+        assert sum(rows.values()) == 1_200_000
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
