@@ -189,17 +189,17 @@ def q_cuckoo_shard_metrics(spark, sf_dir):
     )
 
 
-def q_cuckoo_contains_sql(spark, sf_dir):
-    """Pure-JVM probe: filter as a broadcast words table + codegen
-    bit math (zero Python in the probe). Zero false negatives on all
+def q_cuckoo_contains_docs(spark, sf_dir):
+    """Merged-filter membership of every document (broadcast lane,
+    documents keep their doc_id): zero false negatives on all
     inserted keys; disjoint negatives almost all rejected."""
     docs = _docs(spark, sf_dir)
     n = docs.count()
     filt = DistributedCuckooFilter.build(docs, "key", _capacity(n), CFG)
-    pos = filt.contains_sql(docs.select("doc_id", "key"), "key")
+    pos = filt.contains(docs.select("doc_id", "key"), "key")
     n_neg = 10000
     neg_hits = (
-        filt.contains_sql(_negatives(spark, n_neg), "key")
+        filt.contains(_negatives(spark, n_neg), "key")
         .filter(F.col("member")).count()
     )
     eps = CFG.theoretical_fpr(filt.filter.occupied / filt.filter.slot_capacity)
@@ -240,11 +240,10 @@ def q_offset_policy_contains(spark, sf_dir):
     count, bucket_policies.cuh:190-351) through the shard-routed
     distributed path: zero false negatives on inserted document
     keys. State stays on executors; no driver collect."""
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
-
     docs = _docs(spark, sf_dir)
     n = docs.count()
-    filt = ShardedOffsetFilter.build(docs, "key", _capacity(n), 8)
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="offset")
+    filt = ShardedCuckooFilter.build(docs, "key", _capacity(n), 8, cfg)
     out = filt.contains(docs.select("key").distinct())
     return out.join(docs.select("doc_id", "key"), "key").select(
         "doc_id", "member"
@@ -254,14 +253,13 @@ def q_offset_policy_contains(spark, sf_dir):
 def q_addsub_policy_contains(spark, sf_dir):
     """AddSubAltBucketPolicy (two-block displacement, non-pow2 even
     bucket counts, bucket_policies.cuh:96-182): JVM-packed sharded
-    build + pure-SQL stacked-words probe — the whole policy's hash
-    chain, including the unsigned-64 displacement mod, runs in
-    whole-stage codegen."""
+    build + shard-routed probe — the policy's hash chain, including
+    the unsigned-64 displacement mod, runs in whole-stage codegen."""
     docs = _docs(spark, sf_dir)
     n = docs.count()
     cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="addsub")
     filt = ShardedCuckooFilter.build(docs, "key", _capacity(n), 8, cfg)
-    out = filt.contains_sql(docs.select("key").distinct())
+    out = filt.contains(docs.select("key").distinct())
     return out.join(docs.select("doc_id", "key"), "key").select(
         "doc_id", "member"
     )
@@ -1004,7 +1002,7 @@ def q_bloom_semijoin_orders(spark, sf_dir):
     filt = DistributedCuckooFilter.build(
         seg.select(F.col("c_custkey").alias("key")), "key", _capacity(n_seg), CFG
     )
-    pre = filt.contains_sql(
+    pre = filt.contains(
         orders.select("o_orderkey", F.col("o_custkey").alias("key")), "key"
     ).filter(F.col("member"))
     verified = pre.join(
@@ -1022,7 +1020,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cuckoo_delete_requery": q_cuckoo_delete_requery,
         "cuckoo_merge_associativity": q_cuckoo_merge_associativity,
         "cuckoo_shard_metrics": q_cuckoo_shard_metrics,
-        "cuckoo_contains_sql": q_cuckoo_contains_sql,
+        "cuckoo_contains_sql": q_cuckoo_contains_docs,
         "cuckoo_per_lang": q_cuckoo_per_lang,
         "offset_policy_contains": q_offset_policy_contains,
         "addsub_policy_contains": q_addsub_policy_contains,

@@ -118,6 +118,11 @@ class CuckooFilter:
 
     def __init__(self, capacity: int, config: CuckooConfig | None = None):
         self.config = config or CuckooConfig()
+        if self.config.bucket_policy not in _BUCKET_POLICIES:
+            raise ValueError(
+                f"bucket_policy {self.config.bucket_policy!r} runs on "
+                "core.offset.OffsetCuckooFilter, not CuckooFilter"
+            )
         self.capacity = int(capacity)
         self.num_buckets = self.config.num_buckets_for(capacity)
         self._mask = np.uint64(self.num_buckets - 1)
@@ -479,34 +484,6 @@ class CuckooFilter:
         call ``add_many``); the success mask is tracked in
         ``occupied``/``failures`` metrics."""
         self.insert_many(keys)
-
-    def insert_many_sorted(self, keys: np.ndarray) -> np.ndarray:
-        """Locality-optimized insert: sort the batch by primary bucket
-        before placement (the in-batch analog of insertManySorted's
-        radix sort, ``CuckooFilter.cuh:475-508``). Semantics differ
-        only in intra-batch order, which membership can't observe."""
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        h = chained_hash(keys, FP_SALT)
-        order = np.argsort(h & self._mask, kind="stable")
-        out = np.zeros(len(keys), dtype=bool)
-        out[order] = self.insert_many(keys[order])
-        return out
-
-    #: adaptiveInsert cutoff (reference: 2^29 keys switches to the
-    #: sorted path, benchmark_common.cuh:113-126). MEASURED on CPU
-    #: (BENCH/sorted_vs_unsorted.json): the in-batch sort costs more
-    #: than the locality it buys at every size (0.63-0.81x) — the
-    #: GPU's memory-coalescing win does not transfer to cache-
-    #: hierarchy CPUs with chunked placement, so the adaptive path
-    #: never switches by default.
-    ADAPTIVE_SORT_THRESHOLD = 1 << 62
-
-    def adaptive_insert(self, keys: np.ndarray) -> np.ndarray:
-        """insert_many below the threshold, insert_many_sorted above
-        (adaptiveInsert, ``benchmark_common.cuh:113-126``)."""
-        if len(keys) >= self.ADAPTIVE_SORT_THRESHOLD:
-            return self.insert_many_sorted(keys)
-        return self.insert_many(keys)
 
     # ------------------------------------------------------------------
     # contains

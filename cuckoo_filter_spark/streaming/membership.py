@@ -27,10 +27,7 @@ def stream_membership(
     filter blob is broadcast once; the same vectorized pandas UDF
     used in batch runs per micro-batch (stateless, so any output
     mode works)."""
-    spark = stream_df.sparkSession
-    return stream_df.withColumn(
-        out_col, filt.contains_udf(spark)(F.col(key_col))
-    )
+    return filt.contains(stream_df, key_col, out_col)
 
 
 def stream_novel_keys(

@@ -17,9 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F
 
 from cuckoo_filter_spark.config import CuckooConfig
-from cuckoo_filter_spark.operators.membership import (
-    DistributedCuckooFilter, ShardedCuckooFilter,
-)
+from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 from cuckoo_filter_spark.sources.repo_table import synthetic_repo_files
 
 
@@ -78,16 +76,6 @@ def main():
         "Exchange; the filter rides a broadcast variable, shard "
         "routing is recomputed worker-side (bit-exact router).",
         cap_explain(probe),
-    ))
-
-    sqlp = filt.contains_sql(keys)
-    sections.append((
-        "Pure-SQL contains: two BroadcastHashJoins against the "
-        "filter-as-words dimension + per-lane bit math — all inside "
-        "WholeStageCodegen, zero Python. Look for: "
-        "`BroadcastHashJoin ... BuildRight`, `ReusedExchange` for "
-        "the second probe side.",
-        cap_explain(sqlp),
     ))
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")

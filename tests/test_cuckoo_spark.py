@@ -12,7 +12,7 @@ from cuckoo_filter_spark.config import CuckooConfig
 from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 from cuckoo_filter_spark.hashing import key_from_content, keys_to_unsigned
 from cuckoo_filter_spark.operators.membership import (
-    DistributedCuckooFilter, ShardedCuckooFilter, ShardedOffsetFilter,
+    DistributedCuckooFilter, ShardedCuckooFilter,
 )
 from cuckoo_filter_spark.sources.repo_table import (
     repo_files_from_documents, synthetic_repo_files,
@@ -21,6 +21,10 @@ from cuckoo_filter_spark.sources.repo_table import (
 N_ROWS = 20_000
 CAPACITY = 32_768
 CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
+POLICIES = {
+    p: CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=p)
+    for p in ("xor", "addsub", "offset")
+}
 
 
 @pytest.fixture(scope="module")
@@ -190,32 +194,6 @@ def test_merged_build_empty_input(spark):
     ).any()
 
 
-def test_delete_broadcast_matches_routed(spark, repo_df):
-    """delete_broadcast (zero-sort, broadcast state) must agree with
-    the cogroup-routed delete: same per-key outcomes, same surviving
-    membership, untouched shards pass through with metrics intact."""
-    sharded = ShardedCuckooFilter.build(repo_df, "key", CAPACITY, 8, CFG).persist()
-    # delete only keys of ~half the shards so some shards are untouched
-    evens = repo_df.filter(F.pmod(F.xxhash64("key"), 4) == 0).select("key")
-    n_even = evens.count()
-    odds = repo_df.join(evens, "key", "left_anti").select("key")
-
-    r1, f1 = sharded.delete(evens)
-    r2, f2 = sharded.delete_broadcast(evens)
-    assert f2.shard_num_buckets == sharded.shard_num_buckets
-    ok1 = {(r.key, r.ok) for r in r1.collect()}
-    ok2 = {(r.key, r.ok) for r in r2.collect()}
-    assert ok1 == ok2 and len(ok2) == n_even
-    assert f1.total_occupied() == f2.total_occupied()
-    m2 = f2.metrics().collect()[0]
-    assert m2["num_shards"] == 8 and m2["rows"] == repo_df.count()
-    # surviving keys all still found through the new filter
-    still = f2.contains(odds)
-    assert still.filter(~F.col("member")).count() == 0
-    f1.release()
-    f2.release()
-
-
 def test_delete_scalar_mode(spark, repo_df):
     """per_key=False must produce the same new filter and success
     count as the default mode, without per-key result columns (the
@@ -233,23 +211,6 @@ def test_delete_scalar_mode(spark, repo_df):
     assert r1.filter(F.col("ok")).count() == n
     f1.release()
     f2.release()
-
-
-def test_delete_broadcast_state_cached(spark, repo_df):
-    """Two delete_broadcast calls against the SAME filter snapshot
-    reuse one collected+broadcast state (regression: every call
-    re-collected and re-broadcast the full shard state)."""
-    sharded = ShardedCuckooFilter.build(repo_df, "key", CAPACITY, 8, CFG).persist()
-    evens = repo_df.filter(F.pmod(F.xxhash64("key"), 4) == 0).select("key")
-    odds = repo_df.filter(F.pmod(F.xxhash64("key"), 4) == 1).select("key")
-    r1, f1 = sharded.delete_broadcast(evens)
-    state_after_first = sharded._del_state
-    assert state_after_first is not None
-    r2, f2 = sharded.delete_broadcast(odds)
-    assert sharded._del_state is state_after_first  # no re-broadcast
-    assert r1.count() == evens.count() and r2.count() == odds.count()
-    sharded.release()
-    assert sharded._del_state is None
 
 
 def test_sharded_counts_exact(spark, repo_df):
@@ -294,10 +255,6 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
     object.__setattr__(sharded, "on_oversize_broadcast", "raise")
     with pytest.raises(ValueError, match="broadcast guard"):
         sharded.contains_broadcast(probes)
-    with pytest.raises(ValueError, match="broadcast guard"):
-        sharded.contains_sql(probes)
-    with pytest.raises(ValueError, match="broadcast guard"):
-        sharded.delete_broadcast(probes)
 
     object.__setattr__(sharded, "on_oversize_broadcast", "fallback")
     with warnings.catch_warnings(record=True) as w:
@@ -308,8 +265,6 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
         }
         assert any("broadcast guard" in str(x.message) for x in w)
     assert got == want
-    res, _ = sharded.delete_broadcast(probes.limit(50))
-    assert res.filter(F.col("ok")).count() == 50
 
 
 def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
@@ -348,8 +303,7 @@ def test_build_skips_null_keys(spark):
     df = spark.createDataFrame([(1,), (2,), (None,), (3,)], "key long")
     builds = [
         ShardedCuckooFilter.build(df, "key", 64, 4, CFG),
-        ShardedCuckooFilter.build(df, "key", 64, 4, CFG, jvm_pack=False),
-        ShardedOffsetFilter.build(df, "key", 64, 4),
+        ShardedCuckooFilter.build(df, "key", 64, 4, POLICIES["offset"]),
     ]
     for flt in builds:
         m = flt.metrics().collect()[0]
@@ -372,3 +326,83 @@ def test_contains_broadcast_empty_filter(spark):
     assert sorted(out.collect(), key=lambda r: r.tag) == [
         (1, "a", False), (2, "b", False), (None, "c", False),
     ]
+
+
+NULL_PROBES = [(1,), (None,), (5000,)]
+
+
+@pytest.mark.parametrize("policy", sorted(POLICIES))
+def test_routed_null_probe_keys(spark, policy):
+    """A null probe key never reaches a kernel in the routed lanes: it
+    comes back with its key null and member=False, count=0 or
+    ok=False, and a null delete removes nothing."""
+    cfg = POLICIES[policy]
+    df = spark.createDataFrame([(1,), (2,), (3,)], "key long")
+    flt = ShardedCuckooFilter.build(df, "key", 64, 4, cfg).persist()
+    probes = spark.createDataFrame(NULL_PROBES, "key long")
+    got = {r.key: r.member for r in flt.contains(probes).collect()}
+    assert got[None] is False and got[1] is True
+    assert len(got) == 3
+    if policy == "offset":
+        with pytest.raises(NotImplementedError, match="offset"):
+            flt.counts(probes)
+    else:
+        counts = {r.key: r["count"] for r in flt.counts(probes).collect()}
+        assert counts == {1: 1, None: 0, 5000: counts[5000]}
+    res, after = flt.delete(probes)
+    ok = {r.key: r.ok for r in res.collect()}
+    assert ok[None] is False and ok[1] is True and len(ok) == 3
+    assert after.total_occupied() == 3 - 1 - int(ok[5000])
+    assert after.delete_success_count() == 1 + int(ok[5000])
+    after.release()
+    flt.release()
+
+
+@pytest.mark.parametrize("policy", ["xor", "offset"])
+def test_forced_fallback_keeps_every_query_row(spark, policy):
+    """The oversize fallback answers row for row like the broadcast
+    lane, null-keyed and duplicate rows included, columns in order."""
+    import warnings
+
+    df = spark.createDataFrame([(1,), (2,), (3,)], "key long")
+    flt = ShardedCuckooFilter.build(df, "key", 64, 4, POLICIES[policy])
+    queries = spark.createDataFrame(
+        [("a", 1), ("b", None), ("c", 5000), ("d", 1)], "tag string, key long"
+    )
+    bcast = flt.contains_broadcast(queries, "key")
+    assert bcast.columns == ["tag", "key", "member"]
+    want = sorted(bcast.collect())
+    assert want == [("a", 1, True), ("b", None, False),
+                    ("c", 5000, False), ("d", 1, True)]
+    forced = ShardedCuckooFilter(
+        flt.shards, flt.num_shards, flt.config, flt.key_col,
+        shard_num_buckets=flt.shard_num_buckets, max_broadcast_bytes=16,
+    )
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        fell_back = forced.contains_broadcast(queries, "key")
+        assert any("broadcast guard" in str(x.message) for x in w)
+    assert fell_back.columns == bcast.columns
+    assert sorted(fell_back.collect()) == want
+    flt.release()
+
+
+@pytest.mark.parametrize("policy", sorted(POLICIES))
+def test_broadcast_null_in_batch(spark, policy):
+    """One null in an Arrow batch must not cost the other keys of the
+    batch their answer (a null turns a pandas int64 batch into float64,
+    which rounds every 64-bit key)."""
+    rng = np.random.default_rng(17)
+    keys = [int(k) for k in rng.integers(-(2**62), 2**62, 2000)]
+    df = spark.createDataFrame([(k,) for k in keys], "key long")
+    flt = ShardedCuckooFilter.build(df, "key", 4000, 4, POLICIES[policy])
+    probes = spark.createDataFrame(
+        [(k,) for k in keys] + [(None,)], "key long"
+    ).coalesce(1)
+    out = flt.contains_broadcast(probes, "key")
+    got = {r.key: r.member for r in out.collect()}
+    assert got[None] is False
+    assert all(got[k] for k in keys)
+    merged = DistributedCuckooFilter.build(df, "key", 4000, CFG)
+    assert merged.contains(probes, "key").filter(~F.col("member")).count() == 1
+    flt.release()

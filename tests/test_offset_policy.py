@@ -5,7 +5,11 @@ forward/backward displacement."""
 import numpy as np
 import pytest
 
+from cuckoo_filter_spark.config import CuckooConfig
+from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
+
+OFFSET_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="offset")
 
 
 def _keys(n, seed=42):
@@ -83,6 +87,34 @@ def test_offset_parameter_guards():
         OffsetCuckooFilter(1024, bucket_size=128)
 
 
+def test_offset_policy_config():
+    """The offset policy is a CuckooConfig parameter: exact bucket
+    count, tags up to 16 bits, and it runs on OffsetCuckooFilter —
+    CuckooFilter rejects it instead of mis-addressing."""
+    assert OFFSET_CFG.num_buckets_for(1001) == 251
+    assert OffsetCuckooFilter(1001).num_buckets == 251
+    with pytest.raises(ValueError, match="bits_per_tag"):
+        CuckooConfig(bits_per_tag=32, bucket_policy="offset")
+    with pytest.raises(ValueError, match="OffsetCuckooFilter"):
+        CuckooFilter(1024, OFFSET_CFG)
+
+
+def test_offset_sharded_ops_without_kernel(spark, tmp_path):
+    """Ops the offset kernel lacks fail up front, before any job."""
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
+
+    df = spark.createDataFrame([(1,)], "key long")
+    filt = ShardedCuckooFilter.build(df, "key", 64, 4, OFFSET_CFG)
+    with pytest.raises(NotImplementedError, match="offset"):
+        filt.counts(df)
+    with pytest.raises(NotImplementedError, match="offset"):
+        ShardedCuckooFilter.build_bucketed(df, 64, 4, OFFSET_CFG)
+    with pytest.raises(NotImplementedError, match="offset"):
+        ShardedCuckooFilter.write_bucketed_keys(
+            df, "key", 64, 4, str(tmp_path / "bucketed"), OFFSET_CFG
+        )
+
+
 def test_offset_serialization_roundtrip():
     flt = OffsetCuckooFilter(20_000)
     keys = _keys(12_000)
@@ -105,11 +137,11 @@ def test_sharded_offset_filter_spark(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = _keys(20_000).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    filt = ShardedOffsetFilter.build(df, "key", 30_000, 8)
+    filt = ShardedCuckooFilter.build(df, "key", 30_000, 8, OFFSET_CFG)
     m = filt.metrics().collect()[0]
     assert m["num_shards"] == 8 and m["failures"] == 0
     assert m["occupied"] == len(set(keys.tolist()))
@@ -128,11 +160,11 @@ def test_sharded_offset_contains_broadcast(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = _keys(20_000).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    filt = ShardedOffsetFilter.build(df, "key", 30_000, 8)
+    filt = ShardedCuckooFilter.build(df, "key", 30_000, 8, OFFSET_CFG)
     filt.shards.persist().count()
     pos = filt.contains_broadcast(df.select("key"))
     assert pos.filter(~F.col("member")).count() == 0
@@ -160,11 +192,11 @@ def test_sharded_offset_broadcast_guard(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = _keys(20_000).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    filt = ShardedOffsetFilter.build(df, "key", 30_000, 8)
+    filt = ShardedCuckooFilter.build(df, "key", 30_000, 8, OFFSET_CFG)
     probes = df.select("key").distinct()
     routed = filt.contains(probes, "routed").persist()
 
@@ -207,13 +239,13 @@ def test_sharded_offset_delete(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = np.unique(_keys(20_000)).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    built = ShardedOffsetFilter.build(df, "key", 30_000, 8)
-    sharded = ShardedOffsetFilter(
-        built.shards.persist(), built.num_shards, built.key_col
+    built = ShardedCuckooFilter.build(df, "key", 30_000, 8, OFFSET_CFG)
+    sharded = ShardedCuckooFilter(
+        built.shards.persist(), built.num_shards, built.config, built.key_col
     )
     n = len(keys)
     evens = df.filter(F.pmod(F.col("key"), 2) == 0).select("key")
@@ -239,11 +271,11 @@ def test_sharded_offset_delete_count_and_release(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = np.unique(_keys(5_000)).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    sharded = ShardedOffsetFilter.build(df, "key", 8_000, 4)
+    sharded = ShardedCuckooFilter.build(df, "key", 8_000, 4, OFFSET_CFG)
     evens = df.filter(F.pmod(F.col("key"), 2) == 0).select("key")
     _res, newf = sharded.delete(evens)
     assert newf.delete_success_count() == evens.count()

@@ -1,5 +1,5 @@
-"""JVM↔numpy parity of the chained hash family and the pure-SQL
-membership probe (filter-as-broadcast-dimension + codegen bit math).
+"""JVM↔numpy parity of the chained hash family and of the lanes
+built on it: JVM-packed builds and probes against numpy kernels.
 
 The whole design rests on bit-exactness between
 ``hashing.chained_hash`` (numpy) and ``F.xxhash64(col, lit(salt))``
@@ -16,10 +16,21 @@ from cuckoo_filter_spark.hashing import (
     keys_to_unsigned,
 )
 from cuckoo_filter_spark.operators.membership import (
-    DistributedCuckooFilter, ShardedCuckooFilter, ShardedOffsetFilter,
+    ShardedCuckooFilter, _packed_shard_shift, _per_shard_cap,
 )
 
 CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
+OFFSET_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
+                          bucket_policy="offset")
+
+
+def _key_build(df, num_shards, cfg):
+    """The key-shipping builder run with the plain CuckooFilter kernel
+    (the policy of ``cfg``): the reference the packed build must
+    match bit for bit."""
+    return ShardedCuckooFilter._build_keys(
+        df, "key", num_shards, cfg, _per_shard_cap(6000, num_shards)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -66,28 +77,12 @@ def test_candidate_exprs_match_kernel(spark, keys_df):
         assert by_key[int(k)] == (int(a), int(b), int(c))
 
 
-def test_contains_sql_merged(spark, keys_df):
-    df, keys = keys_df
-    filt = DistributedCuckooFilter.build(df, "key", 6000, CFG)
-    out = filt.contains_sql(df, "key")
-    assert out.filter(~F.col("member")).count() == 0  # zero false negatives
-    # parity with the pandas-UDF broadcast path on mixed probes
-    probes = df.unionByName(
-        spark.range(4096).select((F.col("id") + 2**40).alias("key"))
-    )
-    sql_res = {r.key: r.member for r in filt.contains_sql(probes, "key").collect()}
-    udf_res = {r.key: r.member for r in filt.contains(probes, "key").collect()}
-    assert sql_res == udf_res
-
-
 def test_packed_build_matches_key_build(spark, keys_df):
     df, keys = keys_df
     # 16 shards: several per task; 2 shards: fewer shards than cores
     for num_shards in (8, 16, 2):
-        a = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG,
-                                      jvm_pack=True)
-        b = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG,
-                                      jvm_pack=False)
+        a = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG)
+        b = _key_build(df, num_shards, CFG)
         blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
                    for r in a.shards.collect()}
         blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
@@ -103,9 +98,9 @@ def test_shard_placement_one_task_per_core(spark, keys_df, num_shards):
     shards, an equal share per task, no empty task."""
     df, _ = keys_df
     parts = min(num_shards, spark.sparkContext.defaultParallelism)
-    for jvm_pack in (True, False):
-        flt = ShardedCuckooFilter.build(df, "key", 6000, num_shards, CFG,
-                                        jvm_pack=jvm_pack)
+    # the packed build (xor) and the key-shipping build (offset)
+    for cfg in (CFG, OFFSET_CFG):
+        flt = ShardedCuckooFilter.build(df, "key", 6000, num_shards, cfg)
         assert flt.shards.rdd.getNumPartitions() == parts
         placed = flt.shards.select(
             F.spark_partition_id().alias("p"), "shard_id"
@@ -117,27 +112,6 @@ def test_shard_placement_one_task_per_core(spark, keys_df, num_shards):
             p: set(range(p, num_shards, parts)) for p in range(parts)
         }
         assert {len(s) for s in by_part.values()} == {num_shards // parts}
-    _, new = flt.delete_broadcast(df)
-    assert new._delete_src.rdd.getNumPartitions() == parts
-    assert new.total_occupied() == 0
-    new.release()
-    off = ShardedOffsetFilter.build(df, "key", 6000, num_shards)
-    assert off.shards.rdd.getNumPartitions() == parts
-    assert off.shards.count() == num_shards
-
-
-def test_contains_sql_sharded(spark, keys_df):
-    df, keys = keys_df
-    sh = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG).persist()
-    probes = df.unionByName(
-        spark.range(4096).select((F.col("id") + 2**41).alias("key"))
-    )
-    sql_res = {r.key: r.member for r in sh.contains_sql(probes).collect()}
-    bc_res = {
-        r.key: r.member for r in sh.contains_broadcast(probes, "key").collect()
-    }
-    assert sql_res == bc_res
-    assert all(sql_res[int(k)] for k in keys)  # zero false negatives
 
 
 def test_bucketed_build_matches(spark, keys_df, tmp_path):
@@ -223,10 +197,8 @@ def test_packed_build_matches_key_build_addsub(spark, keys_df):
     (nb/2) in codegen (bucket_policies.cuh:126-143), alt bucket
     resolved numpy-side — bit-identical to the key-shipping build."""
     df, keys = keys_df
-    a = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG,
-                                  jvm_pack=True)
-    b = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG,
-                                  jvm_pack=False)
+    a = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG)
+    b = _key_build(df, 8, ADDSUB_CFG)
     blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
                for r in a.shards.collect()}
     blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
@@ -257,26 +229,39 @@ def test_addsub_routed_contains_delete_packed_lane(spark, keys_df):
 
 
 def test_contains_sql_addsub_parity(spark, keys_df):
-    """AddSub addressing fully in codegen: unsigned-64 displacement
-    via hi/lo split, add/cross vs subtract/return blocks — parity
-    with the numpy broadcast probe on mixed positives/negatives."""
+    """AddSub addressing: the JVM-packed routed probe (unsigned-64
+    displacement via hi/lo split in codegen) and the per-shard
+    broadcast probe (numpy kernel) give the same answer for every
+    key of a mixed positive/negative probe set."""
     df, keys = keys_df
-    filt = DistributedCuckooFilter.build(df, "key", 6000, ADDSUB_CFG)
     probes = df.unionByName(
         spark.range(4096).select((F.col("id") + 2**44).alias("key"))
     )
-    sql_res = {r.key: r.member
-               for r in filt.contains_sql(probes, "key").collect()}
-    udf_res = {r.key: r.member
-               for r in filt.contains(probes, "key").collect()}
-    assert sql_res == udf_res
-    assert all(sql_res[int(k)] for k in keys)
-
     sh = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG).persist()
-    sh_sql = {r.key: r.member for r in sh.contains_sql(probes).collect()}
-    sh_routed = {r.key: r.member for r in sh.contains(probes).collect()}
-    assert sh_sql == sh_routed
-    assert all(sh_sql[int(k)] for k in keys)
+    bcast = {r.key: r.member
+             for r in sh.contains_broadcast(probes, "key").collect()}
+    routed = {r.key: r.member for r in sh.contains(probes).collect()}
+    assert len(bcast) == len(keys) + 4096
+    assert bcast == routed
+    assert all(bcast[int(k)] for k in keys)
+    sh.release()
+
+
+def test_packed_layout_bit_budget(keys_df):
+    """shard+bucket+tag bits past 62 raise from the geometry alone,
+    before any Spark job; more shards do not fit more capacity."""
+    df, _ = keys_df
+    cfg32 = CuckooConfig(bits_per_tag=32, bucket_size=4)
+    # 2^31 buckets per shard: 32 tag + 31 bucket bits leave no room
+    with pytest.raises(ValueError, match="over the 62"):
+        _packed_shard_shift(1 << 33, 16, cfg32)
+    assert _packed_shard_shift(1 << 20, 16, cfg32) == 32 + 18
+    # 2^50 keys at f=16, b=4 need 64 bits however they are sharded
+    for shards in (16, 1 << 10):
+        with pytest.raises(ValueError, match="over the 62"):
+            _packed_shard_shift((1 << 50) // shards, shards, CFG)
+        with pytest.raises(ValueError, match="over the 62"):
+            ShardedCuckooFilter.build(df, "key", 1 << 50, shards, CFG)
 
 
 def test_bucketed_layout_sidecar_validation(spark, keys_df, tmp_path):
